@@ -2,7 +2,7 @@
 
 ``entry(spark)`` — flagship extraction pipeline on /root/testdata/sf0.001:
 derives the interleaved text+media span table from documents.parquet (no
-UDF, built-ins only) and runs the zero-shuffle mapInPandas extraction
+UDF, built-ins only) and runs the zero-shuffle mapInArrow extraction
 (operators/pipeline.py) — the Spark re-expression of the reference's
 HierarchicalChunker::chunk_file (src/hierarchical_chunker.cpp:552-634).
 
@@ -170,8 +170,10 @@ def _reap_stale_scratch() -> None:
 # restored exactly as before), and every query still computes from the
 # parquet files.  The mtime signature (10 stat calls, ~µs) invalidates
 # the memo when a table dir is rewritten or appears mid-session, so a
-# regenerated sf_dir never serves a stale file listing; keyed by context
-# id so a restarted session re-infers (the util._SHIPPED idiom).  One
+# regenerated sf_dir never serves a stale file listing.  Keyed by
+# session, not context: a DataFrame belongs to the session that built it,
+# so a ``spark.newSession()`` (same context, own temp-view catalog) that
+# reused another session's readers would register its views THERE.  One
 # entry per key tuple: a changed signature inserts a fresh entry and the
 # stale one is dropped below.
 _READER_CACHE: dict[tuple, list] = {}
@@ -212,10 +214,12 @@ def _prepare(spark: SparkSession, sf_dir: str) -> None:
     # that one invocation instead of every later scan (advice r9)
     spark.conf.unset("spark.sql.parquet.pushdown.inFilterThreshold")
     base = os.path.abspath(sf_dir)
-    key = (id(spark.sparkContext), base, _sf_signature(base))
+    # the session object itself (identity hash), so a hit can only return
+    # frames whose sparkSession is this very session
+    key = (spark, base, _sf_signature(base))
     readers = _READER_CACHE.get(key)
     if readers is None:
-        # drop any stale entries for this (context, dir) pair so a
+        # drop any stale entries for this (session, dir) pair so a
         # rewritten sf_dir does not pin dead file listings in memory
         for k in [k for k in _READER_CACHE if k[:2] == key[:2]]:
             del _READER_CACHE[k]

@@ -10,7 +10,11 @@ Reference:
 - ``ParseOptions``: include/fast_pdf_parser/fast_pdf_parser.h:12-19
   (thread_count=hw, max_memory_per_page=50MB, extract_positions/fonts/colors,
   batch_size=10). ``thread_count`` maps to Spark task parallelism,
-  ``batch_size`` to Arrow ``maxRecordsPerBatch``.
+  ``batch_size`` to Arrow ``maxRecordsPerBatch``. The projection flags have
+  no field: the chunking path runs with them off
+  (src/hierarchical_chunker.cpp:562-563), which here is the scan pruned to
+  (doc_id, spans); ``sources.pdf_lexer.extract_page_structured`` takes them
+  as keyword arguments.
 """
 
 from __future__ import annotations
@@ -68,15 +72,6 @@ class ParseOptions(_PartialUpdate):
     # Arrow batch sizing — the analogue of the reference's batch_size=10 /
     # 50MB-per-page memory budget (fast_pdf_parser.h:15,18).
     arrow_max_records_per_batch: int = 64
-    # Extraction projection flags (text_extractor.h:9-14). The chunking path
-    # turns positions/fonts off (src/hierarchical_chunker.cpp:562-563).
-    extract_positions: bool = False
-    extract_fonts: bool = False
-    # JVM↔Python transport for the extraction fold: mapInArrow (pyarrow
-    # RecordBatches straight through, no pandas materialization either
-    # direction) vs mapInPandas. Same fold, same output — benchmarked in
-    # BENCH/ARROW_NATIVE_r5.json; False restores the pandas path.
-    arrow_native: bool = True
     # Giant-doc auto-routing threshold in span-text bytes (the Spark
     # analogue of the reference's per-page/batch memory budget,
     # fast_pdf_parser.h:15-18). 0 = off (every doc takes the zero-shuffle

@@ -5,13 +5,14 @@ Spark-first design (SURVEY.md §3.1 "Spark lifecycle equivalent"):
 
 - The input table has ONE ROW PER DOCUMENT with the span array inline, so the
   whole-document locality the 7 sequential passes need (SURVEY.md §2.7) is
-  already present — the pipeline is a single ``mapInPandas`` stage with
+  already present — the pipeline is a single ``mapInArrow`` stage with
   **zero shuffles**. No groupBy, no join, no sort: at 100 TB the only data
   movement is the optional salted repartition for skew.
-- Everything crossing the JVM↔Python boundary moves as Arrow batches; the
-  per-row work inside the UDF is the per-document sequential fold that
-  defines the algorithm (the "loops inside a pandas UDF" contract,
-  SURVEY.md §4).
+- Everything crossing the JVM↔Python boundary moves as pyarrow
+  RecordBatches (mapInArrow, no pandas on either side, on both the
+  contiguous and the split path); the per-row work inside the UDF is the
+  per-document sequential fold that defines the algorithm (the "loops
+  inside a vectorized UDF" contract, SURVEY.md §4).
 - Column pruning: only (doc_id, spans) are selected before the UDF — Catalyst
   prunes the parquet scan to exactly those (the analogue of
   extract_positions=false/extract_fonts=false, hierarchical_chunker.cpp:562-563).
@@ -45,7 +46,6 @@ from __future__ import annotations
 
 import base64
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
@@ -62,9 +62,6 @@ OUTPUT_DDL = (
     "doc_error string"
 )
 
-_COLUMNS = [f.split(" ")[0] for f in OUTPUT_DDL.split(", ")]
-
-
 class _DocFold:
     """Incremental per-document fold: spans pushed ONE AT A TIME in
     document order (the (offset, kind, text) sort order), CORE rows
@@ -74,9 +71,9 @@ class _DocFold:
     never the whole document's output (the Spark-side analogue of the
     reference's batch-bounded consume, src/fast_pdf_parser.cpp:75-115).
 
-    ``finish()`` flushes the tail and populates ``self.meta`` with
-    {total_pages, parse_failures, bytes_decoded, first_error} — doc
-    totals only exist at doc end, which is exactly why they can't ride on
+    ``finish()`` flushes the tail; ``doc_meta()`` then holds the final
+    doc totals (total_pages, parse_failures, bytes_decoded, first_error) —
+    they only exist at doc end, which is exactly why they can't ride on
     incrementally-emitted rows (see _FlushState for where they attach).
 
     The incremental form exists so extract_documents_split can feed a
@@ -96,7 +93,6 @@ class _DocFold:
         self._emitted = 0
         self._pushed = 0
         self._chunker = None
-        self.meta: dict = {}
 
     def _chunk_rows(self, chunks):
         rows = []
@@ -203,8 +199,8 @@ class _DocFold:
             yield self._passthrough_row(kind, s["text"], s["media_ref"])
 
     def finish(self):
-        """Flush the tail, emit the no-output meta row if needed, and
-        populate ``self.meta``; yields the remaining rows."""
+        """Flush the tail and emit the no-output meta row if needed;
+        yields the remaining rows."""
         if self._chunker is not None:
             yield from self._chunk_rows(self._chunker.finish())
             self._chunker = None
@@ -214,29 +210,18 @@ class _DocFold:
             # meta counters (pages seen, failures, first error) are the
             # error-containment contract. One kind='meta' row carries them.
             yield self._passthrough_row("meta", None, None)
-        self.meta = {
-            "total_pages": self.total_pages,
-            "parse_failures": self.parse_failures,
-            "bytes_decoded": self.bytes_decoded,
-            "first_error": self.first_error,
-        }
 
     def doc_meta(self) -> tuple:
-        """The four doc_* meta columns (valid after finish())."""
-        return (self.meta["total_pages"], self.meta["parse_failures"],
-                self.meta["bytes_decoded"], self.meta["first_error"])
+        """The four doc_* meta columns (final after finish())."""
+        return (self.total_pages, self.parse_failures,
+                self.bytes_decoded, self.first_error)
 
 
-def _iter_doc_rows(
-    doc_id: str,
-    spans,
-    tokenizer,
-    chunk_options: ChunkOptions,
-    meta_out: dict,
-):
+def _iter_doc_rows(fold: _DocFold, spans):
     """One-row-per-doc form of the fold: sort the span array, stream it
-    through _DocFold. Input references are released as they are consumed
-    (ordered[i] = None) so a giant document's span text becomes
+    through ``fold`` (built by the caller, which reads ``fold.doc_meta()``
+    once this is exhausted). Input references are released as they are
+    consumed (ordered[i] = None) so a giant document's span text becomes
     collectable span by span."""
     # (offset, kind, text) — offset is THE document order; the null-safe
     # kind/text tiebreak only matters for (out-of-contract) duplicate
@@ -247,13 +232,11 @@ def _iter_doc_rows(
         spans,
         key=lambda s: (s["offset"], s["kind"] or "", s["text"] or ""),
     )
-    fold = _DocFold(doc_id, tokenizer, chunk_options)
     for i in range(len(ordered)):
         s = ordered[i]
         ordered[i] = None  # release the span (and its text) once consumed
         yield from fold.push_span(s)
     yield from fold.finish()
-    meta_out.update(fold.meta)
 
 
 def process_document(
@@ -269,12 +252,9 @@ def process_document(
     the materialized view of the streaming fold (_iter_doc_rows): every
     row carries the doc's final meta columns.
     """
-    meta: dict = {}
-    rows = list(_iter_doc_rows(doc_id, spans, tokenizer, chunk_options, meta))
-    doc_meta = (
-        meta["total_pages"], meta["parse_failures"],
-        meta["bytes_decoded"], meta["first_error"],
-    )
+    fold = _DocFold(doc_id, tokenizer, chunk_options)
+    rows = list(_iter_doc_rows(fold, spans))
+    doc_meta = fold.doc_meta()
     return [row + doc_meta for row in rows]
 
 
@@ -303,7 +283,7 @@ _NULL_META = (None, None, None, None)
 
 class _FlushState:
     """Budget-bounded row buffering shared by the one-row-per-doc and the
-    split (one-row-per-span) processors: rows go in via ``add_row`` /
+    split (one-row-per-span) input loops: rows go in via ``add_rows`` /
     ``end_doc`` / ``end``, each of which yields zero or more row-tuple
     BATCHES honoring the _FLUSH_CHARS/_FLUSH_ROWS budget and the meta
     contract (offset-0 row withheld to doc end so it always carries final
@@ -322,24 +302,25 @@ class _FlushState:
         self.doc_rows: list[tuple] = []
         self.doc_chars = 0
 
-    def add_row(self, row: tuple):
-        """One CORE row of the current document; yields flush batches."""
-        if self.first_row is None:
-            self.first_row = row
-            return
-        self.doc_rows.append(row)
-        if row[3]:
-            self.doc_chars += len(row[3])
-        if (self.doc_chars >= _FLUSH_CHARS
-                or len(self.doc_rows) >= _FLUSH_ROWS):
-            # mid-doc flush (giant doc): stream what we have; these rows
-            # carry NULL meta (not known yet). Completed rows go out as
-            # their own batch so the two buffers never stack.
-            if self.rows:
-                yield self.rows
-                self.rows, self.pending_chars = [], 0
-            yield [r + _NULL_META for r in self.doc_rows]
-            self.doc_rows, self.doc_chars = [], 0
+    def add_rows(self, rows):
+        """CORE rows of the current document; yields flush batches."""
+        for row in rows:
+            if self.first_row is None:
+                self.first_row = row
+                continue
+            self.doc_rows.append(row)
+            if row[3]:
+                self.doc_chars += len(row[3])
+            if (self.doc_chars >= _FLUSH_CHARS
+                    or len(self.doc_rows) >= _FLUSH_ROWS):
+                # mid-doc flush (giant doc): stream what we have; these
+                # rows carry NULL meta (not known yet). Completed rows go
+                # out as their own batch so the two buffers never stack.
+                if self.rows:
+                    yield self.rows
+                    self.rows, self.pending_chars = [], 0
+                yield [r + _NULL_META for r in self.doc_rows]
+                self.doc_rows, self.doc_chars = [], 0
 
     def end_doc(self, doc_meta: tuple):
         """The current document is complete: attach its final meta."""
@@ -373,46 +354,70 @@ class _FlushState:
 
 
 def _iter_flush_batches(doc_ids, spans_col, tokenizer, chunk_options):
-    """Shared flush loop of the one-row-per-doc processors: (doc ids, span
-    lists) → row-tuple batches via _FlushState. ``spans_col`` entries are
-    nulled as consumed."""
+    """Input loop of the one-row-per-doc path: every row is a whole
+    document, so a document ends at every row. (doc ids, span lists) →
+    row-tuple batches via _FlushState. ``spans_col`` entries are nulled as
+    consumed."""
     state = _FlushState()
     for j, doc_id in enumerate(doc_ids):
         spans = spans_col[j]
         spans_col[j] = None
-        meta: dict = {}
-        for row in _iter_doc_rows(
-            doc_id, spans, tokenizer, chunk_options, meta
-        ):
-            yield from state.add_row(row)
+        fold = _DocFold(doc_id, tokenizer, chunk_options)
+        yield from state.add_rows(_iter_doc_rows(fold, spans))
         del spans
-        yield from state.end_doc((
-            meta["total_pages"], meta["parse_failures"],
-            meta["bytes_decoded"], meta["first_error"],
-        ))
+        yield from state.end_doc(fold.doc_meta())
     yield from state.end()
 
 
-def _make_processor(chunk_options: ChunkOptions, vocab_path: str | None):
-    def process_batches(batches):
-        tokenizer = get_tokenizer(vocab_path)  # per-worker singleton
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            spans_col = pdf["spans"].tolist()
-            del pdf  # drop the pandas batch; spans free as docs complete
-            for rows in _iter_flush_batches(
-                doc_ids, spans_col, tokenizer, chunk_options
-            ):
-                yield pd.DataFrame(rows, columns=_COLUMNS)
-
-    return process_batches
+def _doc_row_batches(batches, tokenizer, chunk_options):
+    """Contiguous-path input: Arrow batches of (doc_id, spans) rows."""
+    for batch in batches:
+        doc_ids = batch.column("doc_id").to_pylist()
+        spans_col = batch.column("spans").to_pylist()
+        del batch  # drop the Arrow batch; spans free as docs complete
+        yield from _iter_flush_batches(
+            doc_ids, spans_col, tokenizer, chunk_options)
 
 
-def _make_arrow_processor(chunk_options: ChunkOptions, vocab_path: str | None):
-    """mapInArrow twin of _make_processor: same fold, same flush contract,
-    but the JVM↔Python columns move as pyarrow RecordBatches directly —
-    no pandas Series materialization on input (ListArray.to_pylist is the
-    single conversion) and no pandas→Arrow re-conversion on output."""
+def _span_row_batches(batches, tokenizer, chunk_options):
+    """Split-path input: Arrow batches of (doc_id, pos, span) rows,
+    clustered by doc_id and sorted by span position WITHIN each partition
+    (extract_documents_split arranges this), so a document is a
+    consecutive run of rows — possibly spanning several Arrow batches.
+    The fold state (_DocFold) and the flush buffer (_FlushState) carry
+    across batch boundaries; a document ends when doc_id changes or the
+    partition ends (the one-row-per-doc loop instead ends one at every
+    row, which differs for repeated doc_ids)."""
+    state = _FlushState()
+    fold: _DocFold | None = None
+
+    def close_fold():
+        yield from state.add_rows(fold.finish())
+        yield from state.end_doc(fold.doc_meta())
+
+    for batch in batches:
+        doc_ids = batch.column("doc_id").to_pylist()
+        span_col = batch.column("span").to_pylist()
+        del batch
+        for j, doc_id in enumerate(doc_ids):
+            span = span_col[j]
+            span_col[j] = None  # release as consumed
+            if fold is None or fold.doc_id != doc_id:
+                if fold is not None:
+                    yield from close_fold()
+                fold = _DocFold(doc_id, tokenizer, chunk_options)
+            yield from state.add_rows(fold.push_span(span))
+    if fold is not None:
+        yield from close_fold()
+    yield from state.end()
+
+
+def _arrow_fold(row_batches, chunk_options: ChunkOptions,
+                vocab_path: str | None):
+    """The mapInArrow function around one of the two input loops above.
+    The JVM↔Python columns move as pyarrow RecordBatches both ways:
+    ``to_pylist`` is the single input conversion, and each row-tuple batch
+    leaves as one RecordBatch of OUTPUT_DDL — no pandas either direction."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -430,60 +435,8 @@ def _make_arrow_processor(chunk_options: ChunkOptions, vocab_path: str | None):
 
     def process_batches(batches):
         tokenizer = get_tokenizer(vocab_path)  # per-worker singleton
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            spans_col = batch.column(1).to_pylist()
-            del batch
-            for rows in _iter_flush_batches(
-                doc_ids, spans_col, tokenizer, chunk_options
-            ):
-                yield rows_to_batch(rows)
-
-    return process_batches
-
-
-def _make_split_processor(chunk_options: ChunkOptions, vocab_path: str | None):
-    """mapInPandas processor of the split (one-row-per-span) path: rows
-    arrive clustered by doc_id and sorted by span position WITHIN each
-    partition (extract_documents_split arranges this), so a document is a
-    consecutive run of rows — possibly spanning several Arrow batches.
-    The fold state (_DocFold) and the flush buffer (_FlushState) carry
-    across batch boundaries; doc completion is detected by doc_id change
-    or partition end."""
-
-    def process_batches(batches):
-        tokenizer = get_tokenizer(vocab_path)  # per-worker singleton
-        state = _FlushState()
-        fold: _DocFold | None = None
-
-        def rows_of(gen):
-            for row in gen:
-                yield from state.add_row(row)
-
-        def close_fold():
-            assert fold is not None
-            yield from rows_of(fold.finish())
-            yield from state.end_doc(fold.doc_meta())
-
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            span_col = pdf["span"].tolist()
-            del pdf
-            for j, doc_id in enumerate(doc_ids):
-                span = span_col[j]
-                span_col[j] = None  # release as consumed
-                if fold is None or fold.doc_id != doc_id:
-                    if fold is not None:
-                        for b in close_fold():
-                            yield pd.DataFrame(b, columns=_COLUMNS)
-                    fold = _DocFold(doc_id, tokenizer, chunk_options)
-                for b in rows_of(fold.push_span(span)):
-                    yield pd.DataFrame(b, columns=_COLUMNS)
-        if fold is not None:
-            for b in close_fold():
-                yield pd.DataFrame(b, columns=_COLUMNS)
-        for b in state.end():
-            yield pd.DataFrame(b, columns=_COLUMNS)
+        for rows in row_batches(batches, tokenizer, chunk_options):
+            yield rows_to_batch(rows)
 
     return process_batches
 
@@ -637,13 +590,9 @@ def _extract_contiguous(
     if parse_options.num_partitions > 0:
         pruned = repartition_for_skew(pruned, parse_options.num_partitions)
 
-    if parse_options.arrow_native:
-        return pruned.mapInArrow(
-            _make_arrow_processor(chunk_options, vocab_path),
-            schema=OUTPUT_DDL,
-        )
-    return pruned.mapInPandas(
-        _make_processor(chunk_options, vocab_path), schema=OUTPUT_DDL
+    return pruned.mapInArrow(
+        _arrow_fold(_doc_row_batches, chunk_options, vocab_path),
+        schema=OUTPUT_DDL,
     )
 
 
@@ -729,8 +678,9 @@ def extract_documents_split(
 
         vocab_path = find_real_vocab()
 
-    return flat.mapInPandas(
-        _make_split_processor(chunk_options, vocab_path), schema=OUTPUT_DDL
+    return flat.mapInArrow(
+        _arrow_fold(_span_row_batches, chunk_options, vocab_path),
+        schema=OUTPUT_DDL,
     )
 
 

@@ -129,6 +129,31 @@ def html_from_page(doc_idx: int, page_idx: int, seed: int = 42) -> str:
     return HTML_PREFIX + body + HTML_SUFFIX
 
 
+def _draw_layout(doc_idx: int, seed: int, include_pdf: bool,
+                 include_html: bool) -> tuple[bool, list[tuple[str, bool]]]:
+    """The one rng draw sequence behind a document, in draw order: the
+    page-count bucket, the cover-media draw, then per page the pdf draw
+    (only with ``include_pdf``), the html draw (only with ``include_html``
+    and not pdf) and the inline-media draw.  Returns (has_cover,
+    [(page kind, media after the page)]).  make_doc builds the spans from
+    it and _doc_cost weighs it, so the two cannot drift apart."""
+    rng = random.Random(f"{seed}:{doc_idx}")
+    n_pages = rng.choice(_BUCKET_CHOICES)
+    # ~12% of docs start with a media span (cover image)
+    cover = rng.random() < 0.12
+    pages = []
+    for _ in range(n_pages):
+        if include_pdf and rng.random() < 0.25:
+            kind = "pdf"
+        elif include_html and rng.random() < 0.35:
+            kind = "html"
+        else:
+            kind = "text"
+        # ~8% chance of an inline media span after a page
+        pages.append((kind, rng.random() < 0.08))
+    return cover, pages
+
+
 def make_doc(doc_idx: int, seed: int = 42, include_pdf: bool = False,
              corrupt_doc_idx: int = -1, include_html: bool = False) -> dict:
     """One document row: {'doc_id', 'spans'} with interleaved spans.
@@ -139,48 +164,28 @@ def make_doc(doc_idx: int, seed: int = 42, include_pdf: bool = False,
     (html_from_page) — the extra rng draw happens only when enabled, so
     default corpora are byte-identical to earlier rounds.
     """
-    rng = random.Random(f"{seed}:{doc_idx}")
-    n_pages = rng.choice(_BUCKET_CHOICES)
+    cover, pages = _draw_layout(doc_idx, seed, include_pdf, include_html)
     spans = []
-    offset = 0
+
+    def add(kind, text=None, media_ref=None):
+        spans.append({"kind": kind, "text": text, "media_ref": media_ref,
+                      "offset": len(spans)})
+
+    if cover:
+        add("media", media_ref=f"media://img/{doc_idx:06d}_cover.png")
     corrupted = False
-    # ~12% of docs start with a media span (cover image)
-    if rng.random() < 0.12:
-        spans.append(
-            {"kind": "media", "text": None,
-             "media_ref": f"media://img/{doc_idx:06d}_cover.png", "offset": offset}
-        )
-        offset += 1
-    for p in range(n_pages):
-        kind = "text"
-        if include_pdf and rng.random() < 0.25:
+    for p, (kind, media_after) in enumerate(pages):
+        if kind == "pdf":
             from fast_pdf_parser_spark.sources.pdf_builder import build_pdf_span
             corrupt = doc_idx == corrupt_doc_idx and not corrupted
             corrupted = corrupted or corrupt
-            spans.append(
-                {"kind": "pdf",
-                 "text": build_pdf_span(doc_idx, p, seed, corrupt=corrupt),
-                 "media_ref": None, "offset": offset}
-            )
-        elif include_html and rng.random() < 0.35:
-            spans.append(
-                {"kind": "html", "text": html_from_page(doc_idx, p, seed),
-                 "media_ref": None, "offset": offset}
-            )
+            add("pdf", build_pdf_span(doc_idx, p, seed, corrupt=corrupt))
+        elif kind == "html":
+            add("html", html_from_page(doc_idx, p, seed))
         else:
-            spans.append(
-                {"kind": kind, "text": page_text(doc_idx, p, seed),
-                 "media_ref": None, "offset": offset}
-            )
-        offset += 1
-        # ~8% chance of an inline media span after a page
-        if rng.random() < 0.08:
-            spans.append(
-                {"kind": "media", "text": None,
-                 "media_ref": f"media://img/{doc_idx:06d}_{p:04d}.png",
-                 "offset": offset}
-            )
-            offset += 1
+            add("text", page_text(doc_idx, p, seed))
+        if media_after:
+            add("media", media_ref=f"media://img/{doc_idx:06d}_{p:04d}.png")
     return {"doc_id": f"doc_{doc_idx:08d}", "spans": spans}
 
 
@@ -199,25 +204,14 @@ SPANS_DDL = (
 def _doc_cost(doc_idx: int, seed: int, include_pdf: bool,
               include_html: bool) -> int:
     """Deterministic per-doc WORK estimate for writer-side balancing,
-    derived by replaying make_doc's exact rng draw sequence (same seeds,
-    same short-circuit structure) without building any text.  Weights are
-    coarse downstream-parse costs (a pdf page pays the lexer+content
-    interpreter, ~an order of magnitude over a markdown page; html pays
-    the boilerplate strip).  Only file PLACEMENT depends on this — a
-    drifted weight degrades balance, never content."""
-    rng = random.Random(f"{seed}:{doc_idx}")
-    n_pages = rng.choice(_BUCKET_CHOICES)
-    cost = 1
-    rng.random()  # cover-media draw (placement only)
-    for _ in range(n_pages):
-        if include_pdf and rng.random() < 0.25:
-            cost += 10
-        elif include_html and rng.random() < 0.35:
-            cost += 3
-        else:
-            cost += 1
-        rng.random()  # inline-media draw
-    return cost
+    weighed on make_doc's own page layout (_draw_layout) without building
+    any text.  Weights are coarse downstream-parse costs (a pdf page pays
+    the lexer+content interpreter, ~an order of magnitude over a markdown
+    page; html pays the boilerplate strip).  Only file PLACEMENT depends
+    on this — a drifted weight degrades balance, never content."""
+    _, pages = _draw_layout(doc_idx, seed, include_pdf, include_html)
+    weight = {"pdf": 10, "html": 3, "text": 1}
+    return 1 + sum(weight[kind] for kind, _ in pages)
 
 
 def _balanced_groups(n_docs: int, parts: int, seed: int, include_pdf: bool,

@@ -71,3 +71,7 @@ def test_options_partial_update():
     with pytest.raises(ValueError):
         base.updated(min_tokens=500).validate()
     assert ParseOptions().updated(num_partitions=8).num_partitions == 8
+    # no dead or transport-switch fields: unknown like any other name
+    for removed in ("extract_positions", "extract_fonts", "arrow_native"):
+        with pytest.raises(TypeError, match=removed):
+            ParseOptions().updated(**{removed: True})

@@ -23,6 +23,20 @@ def test_entry_returns_rows(spark):
     assert {"doc_id", "offset", "kind", "text", "media_ref"} <= cols
 
 
+def test_prepare_registers_views_per_session(spark):
+    """Two sessions off one context each get their own `documents` view:
+    the reader cache must not hand the second session the first one's
+    DataFrames (whose createOrReplaceTempView lands in the FIRST
+    session's catalog)."""
+    other = spark.newSession()
+    sql = "SELECT count(*) FROM documents"
+    entrymod._prepare(spark, SF_DIR)
+    entrymod._prepare(other, SF_DIR)
+    n = spark.sql(sql).collect()[0][0]
+    assert n > 0
+    assert other.sql(sql).collect()[0][0] == n
+
+
 def test_queries_and_oracles_consistent():
     q = entrymod.queries()
     o = entrymod.oracle_sql()

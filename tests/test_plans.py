@@ -348,7 +348,8 @@ def test_routed_extraction_plan_shape(spark, wide_corpus):
     """Auto-routed skew tail (ParseOptions.giant_doc_bytes): the union
     plan carries EXACTLY ONE Exchange — the split-path repartition of the
     giant bucket's span rows — while the bulk side stays the zero-shuffle
-    pruned-scan fold. Both branches' scans stay pruned to (doc_id, spans)."""
+    pruned-scan fold. Both branches' scans stay pruned to (doc_id, spans),
+    and both folds cross the JVM↔Python boundary through mapInArrow."""
     from fast_pdf_parser_spark.config import ParseOptions
     from fast_pdf_parser_spark.operators.pipeline import extract_documents
 
@@ -361,6 +362,8 @@ def test_routed_extraction_plan_shape(spark, wide_corpus):
     assert "SinglePartition" not in plan
     for read_schema in plan.split("ReadSchema:")[1:]:
         assert "extra" not in read_schema[:200]
+    assert plan.count("MapInArrow") == 2, plan
+    assert "MapInPandas" not in plan
 
 
 def test_stored_band_candidate_scan_reads_bands_not_text(spark, tmp_path):
