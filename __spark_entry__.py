@@ -32,6 +32,9 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from fast_pdf_parser_spark.util import (  # noqa: E402
+    materialize, release_all, ship_package)
+
 _VIEW_TABLES = ["documents", "embeddings", "events", "region", "nation",
                 "customer", "supplier", "part", "orders", "lineitem"]
 
@@ -191,8 +194,9 @@ def _sf_signature(sf_dir: str) -> tuple:
 
 
 def _prepare(spark: SparkSession, sf_dir: str) -> None:
-    from fast_pdf_parser_spark.util import ship_package
-
+    # the previous query's result has been consumed by now: free its
+    # snapshots and restore the session confs it raised
+    release_all()
     _reap_stale_scratch()
     ship_package(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -208,11 +212,6 @@ def _prepare(spark: SparkSession, sf_dir: str) -> None:
     # target stays max(total/maxParallelism, floor) on any cluster).
     spark.conf.set(
         "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-    # probe_band_table raises the parquet In-pushdown threshold for the
-    # duration of its consuming query (the session conf is the only
-    # lever the v1 reader honors); resetting it here bounds the leak to
-    # that one invocation instead of every later scan (advice r9)
-    spark.conf.unset("spark.sql.parquet.pushdown.inFilterThreshold")
     base = os.path.abspath(sf_dir)
     # the session object itself (identity hash), so a hit can only return
     # frames whose sparkSession is this very session
@@ -615,13 +614,13 @@ def _dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = write_docs_bucketed(spark, prev, out, run_id="prev",
                                  num_buckets=2, write_bands=True)
     corpus.createOrReplaceTempView("incr_near_corpus")
-    # batch bands derived ONCE (localCheckpoint: they feed both the
-    # probe's key collection and the candidate join), then the stored
-    # band table is read PRUNED to those keys
+    # batch bands derived ONCE (materialized: they feed both the probe's
+    # key collection and the candidate join), then the stored band table
+    # is read PRUNED to those keys
     spark.sql(near_batch_spark_sql()).createOrReplaceTempView(
         "incr_near_batch")
-    bb = spark.sql(band_signatures_spark_sql(
-        "incr_near_batch", text_col="text")).localCheckpoint(eager=True)
+    bb = materialize(spark.sql(band_signatures_spark_sql(
+        "incr_near_batch", text_col="text")))
     bb.createOrReplaceTempView("incr_near_batch_bands")
     probe_band_table(spark, out, bb).createOrReplaceTempView(
         "incr_near_corpus_bands")
@@ -629,8 +628,8 @@ def _dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         "incr_near_batch", "incr_near_batch_bands",
         "incr_near_corpus", "incr_near_corpus_bands"))
     # durable materialization before the scratch delete (the
-    # dedup_incremental pattern: localCheckpoint would not survive an
-    # executor loss once the corpus files are gone)
+    # dedup_incremental pattern: a materialized snapshot would not
+    # survive an executor loss once the corpus files are gone)
     vout = out + "_verdict"
     verdict.write.mode("overwrite").parquet(vout)
     _fs_delete(spark, out)
@@ -713,22 +712,21 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds ~6 downstream actions (stage counts, joins, the sink write);
     # without materialization each one re-synthesizes and re-parses the
     # WARC files, so the capstone pays the parse several times over
-    # (review r8). localCheckpoint is the right tier here: scratch
-    # lineage-cut for single-pass evaluation — the durable artifacts this
-    # row reports are still READ BACK from the sinks below.
+    # (review r8). A scratch lineage cut is enough here — the durable
+    # artifacts this row reports are still READ BACK from the sinks below.
     parsed = read_warc_documents(
         _warc_files_df(spark, crawl_batch_spark_sql()))
-    batch_raw = (parsed.filter(F.col("error").isNull())
-                 .select(F.element_at(F.split("url", "/"), -1)
-                         .cast("bigint").alias("doc_id"),
-                         F.col("main_text").alias("text"))
-                 .localCheckpoint())
+    batch_raw = materialize(
+        parsed.filter(F.col("error").isNull())
+        .select(F.element_at(F.split("url", "/"), -1)
+                .cast("bigint").alias("doc_id"),
+                F.col("main_text").alias("text")))
     batch_raw.createOrReplaceTempView("crawl_batch_raw")
     n_batch = batch_raw.count()
 
     # (2) cleaning gates (materialized once: feeds the exact join, the
     # near verdict and the survivor sink)
-    clean = spark.sql(warc_gates_sql("crawl_batch_raw")).localCheckpoint()
+    clean = materialize(spark.sql(warc_gates_sql("crawl_batch_raw")))
     clean.createOrReplaceTempView("crawl_batch_clean")
     n_clean = clean.count()
 
@@ -736,12 +734,11 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_hashes = (corpus.select(F.col("clean_hash").alias("ch"))
                      .distinct())
     bc = spark.table("crawl_batch_clean")
-    exact = (bc.join(corpus_hashes, bc["clean_hash"] == F.col("ch"),
-                     "left")
-             .withColumn("in_corpus",
-                         F.when(F.col("ch").isNotNull(), 1).otherwise(0))
-             .drop("ch")
-             .localCheckpoint())  # feeds two counts + near + survivors
+    exact = materialize(
+        bc.join(corpus_hashes, bc["clean_hash"] == F.col("ch"), "left")
+        .withColumn("in_corpus",
+                    F.when(F.col("ch").isNotNull(), 1).otherwise(0))
+        .drop("ch"))  # feeds two counts + near + survivors
     n_exact_dropped = exact.filter("in_corpus = 1").count()
     exact0 = exact.filter("in_corpus = 0")
     (exact0.select("doc_id", F.col("clean_text").alias("text"))
@@ -749,9 +746,8 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # (4) incremental near dedup: candidates from the STORED band table,
     # scan PRUNED to the batch's own band keys (probe_band_table)
-    sb = spark.sql(band_signatures_spark_sql(
-        "crawl_exact_survivors", text_col="text")).localCheckpoint(
-        eager=True)
+    sb = materialize(spark.sql(band_signatures_spark_sql(
+        "crawl_exact_survivors", text_col="text")))
     sb.createOrReplaceTempView("crawl_surv_bands")
     probe_band_table(spark, base + "_corpus", sb).createOrReplaceTempView(
         "crawl_corpus_bands_pruned")
@@ -855,12 +851,11 @@ def _train_assembly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prepare(spark, sf_dir)
     sf_name = os.path.basename(os.path.normpath(sf_dir))
 
-    # (1) mixture sample: the kept set (localCheckpoint — feeds shuffle,
+    # (1) mixture sample: the kept set (materialized — feeds shuffle,
     # batching, the data card and the pack)
-    kept = spark.sql(
+    kept = materialize(spark.sql(
         "SELECT m.doc_id, m.source, m.doc_toks AS toks FROM ("
-        + spark_sql("text_mixture_sample") + ") m WHERE m.kept = 1"
-    ).localCheckpoint(eager=True)
+        + spark_sql("text_mixture_sample") + ") m WHERE m.kept = 1"))
     kept.createOrReplaceTempView("ta_kept")
     ka = kept.agg(F.count("*").alias("n"),
                   F.sum("toks").alias("t")).collect()[0]
@@ -882,12 +877,11 @@ def _train_assembly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (2) epoch-0 shuffle into loader shards (the text_shard_shuffle
     # discipline: per-shard rank window, no global sort)
     h = _HASH60_SPARK.format(x="concat(CAST(doc_id AS STRING), ':0')")
-    shuf = spark.sql(f"""
+    shuf = materialize(spark.sql(f"""
         SELECT doc_id, toks, CAST(k % {TRAIN_ASM_SHARDS} AS INT) AS shard,
                row_number() OVER (PARTITION BY k % {TRAIN_ASM_SHARDS}
                                   ORDER BY k, doc_id) AS pos
-        FROM (SELECT doc_id, toks, {h} AS k FROM ta_kept)"""
-    ).localCheckpoint(eager=True)
+        FROM (SELECT doc_id, toks, {h} AS k FROM ta_kept)"""))
     n_shuffled = shuf.count()
     n_shards = shuf.select("shard").distinct().count()
     order_hash = int(shuf.selectExpr(
@@ -1021,16 +1015,15 @@ def _text_encode_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the small sf corpus is one parquet split — spread the compute-bound
     # encoder across cores (at 100 TB the scan splits make this a no-op
     # knob; see encode_token_ids docstring).  Encode ONCE and materialize
-    # (localCheckpoint — the _text_encode_pack_geometry idiom; persist()
-    # to MEMORY_AND_DISK at cluster scale): pack_token_ids' default form
+    # (the _text_encode_pack_geometry idiom): pack_token_ids' default form
     # runs a second id-free counting pass over the whole corpus for the
     # shard totals, i.e. ~1.33x the dominant tokenizer compute (guide
     # §1.2: don't compute things twice) — with `encoded` supplied it
     # derives totals from the materialized ids instead.
-    enc = encode_token_ids(
+    enc = materialize(encode_token_ids(
         spark.table("documents"),
         num_partitions=spark.sparkContext.defaultParallelism
-    ).filter(F.col("n_ids") > 0).localCheckpoint(eager=True)
+    ).filter(F.col("n_ids") > 0))
     packed = pack_token_ids(spark.table("documents"), encoded=enc)
     return packed.select(
         "seq_id", "n_docs", "n_tokens",
@@ -1099,11 +1092,11 @@ def _text_encode_pack_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prepare(spark, sf_dir)
     docs = spark.table("documents")
-    # encode ONCE (localCheckpoint): feeds the pack, the totals and the
+    # encode ONCE (materialized): feeds the pack, the totals and the
     # ids-sum conservation check
-    enc = encode_token_ids(
+    enc = materialize(encode_token_ids(
         docs, num_partitions=spark.sparkContext.defaultParallelism
-    ).filter(F.col("n_ids") > 0).localCheckpoint(eager=True)
+    ).filter(F.col("n_ids") > 0))
     packed = pack_token_ids(docs, encoded=enc)
 
     e = enc.agg(

@@ -13,7 +13,8 @@ tests/test_bpe_winnow.py):
   vocabulary run.
 - ``train_bpe(spark, docs, steps)`` (this module): the production shape —
   the corpus collapses ONCE to the word-frequency table, the symbol table
-  is localCheckpoint'ed each iteration (vocabulary-sized: ~O(sqrt corpus)
+  is cut with util.materialize each iteration and the previous step's
+  snapshot freed with util.release (vocabulary-sized: ~O(sqrt corpus)
   rows; the 100 TB corpus is read exactly once), so every step is a
   linear plan over a few-GB relation, and the only driver transfer is the
   ONE-ROW argmax per step. steps=50k is the same loop, not a bigger plan.
@@ -25,26 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _persistent_ids(spark: SparkSession) -> set[int]:
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return set(jmap.keySet().toArray())
-    except AttributeError:  # API moved: degrade, never fail training
-        return set()
-
-
-def _release_rdds(spark: SparkSession, ids: set[int]) -> None:
-    if not ids:
-        return
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for i in ids:
-            rdd = jmap.get(i)
-            if rdd is not None:
-                rdd.unpersist()
-    except AttributeError:
-        pass
+from fast_pdf_parser_spark.util import materialize, release
 
 
 def train_bpe(spark: SparkSession, docs: DataFrame,
@@ -70,25 +52,16 @@ def train_bpe(spark: SparkSession, docs: DataFrame,
 
     w_doc = Window.partitionBy("word").orderBy("i")
     merges: list[tuple[str, int]] = []
-    prev_ids: set[int] = set()
+    prev = None
     for _k in range(steps):
         _t0 = time.time()
         # eager, vocab-sized: cuts the per-step lineage so plan depth and
-        # re-computation stay constant across iterations. The PREVIOUS
-        # step's checkpoint blocks are released explicitly — without this
-        # they linger until driver GC + ContextCleaner happen to reclaim
-        # them, so a deep vocabulary run (steps=50k) would grow executor
-        # storage linearly with steps instead of O(1). DataFrame
-        # .unpersist() does NOT release localCheckpoint blocks (it only
-        # talks to the SQL cache manager), so the release goes through
-        # the persistent-RDD map; a guarded reach-in like clusters.py's
-        # pinned _jdf use — if the API moves, we degrade to the old
-        # GC-eventually behavior rather than fail the training run.
-        before = _persistent_ids(spark)
-        syms = syms.localCheckpoint()
-        new_ids = _persistent_ids(spark) - before
-        _release_rdds(spark, prev_ids)
-        prev_ids = new_ids
+        # re-computation stay constant across iterations; freeing the
+        # previous step's snapshot keeps a deep vocabulary run
+        # (steps=50k) at O(1) executor storage instead of O(steps)
+        syms = materialize(syms)
+        release(prev)  # a no-op on the first step
+        prev = syms
         e = syms.withColumn("nxt", F.lead("sym").over(w_doc))
         top = (e.where("nxt IS NOT NULL")
                .groupBy("sym", "nxt").agg(F.sum("freq").alias("cnt"))

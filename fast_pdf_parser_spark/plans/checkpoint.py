@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
 from fast_pdf_parser_spark.operators.pipeline import extract_documents
+from fast_pdf_parser_spark.util import set_conf
 
 CHECKPOINT_SCHEMA = (
     "run_id string, partition_id int, docs_parsed long, bytes_decoded long, "
@@ -627,7 +628,7 @@ def probe_band_table(spark: SparkSession, out_dir: str,
 
     ``batch_bands`` is the batch's (doc_id, band, band_key) signature
     table (relational.band_signatures_spark_sql over the batch — derive
-    it once, localCheckpoint it, pass it here AND to the verdict SQL).
+    it once, materialize it, pass it here AND to the verdict SQL).
     Two serve shapes, both exact:
 
     - batch has <= max_pushdown_keys distinct keys (every daily-increment
@@ -666,12 +667,10 @@ def probe_band_table(spark: SparkSession, out_dir: str,
         # threshold from the session conf when the consuming query
         # builds its reader (a DataFrameReader option is ignored, and a
         # save/restore here would revert before the caller's lazy
-        # verdict query ever executes).  Cross-query leakage (advice r9)
-        # is bounded instead by __spark_entry__._prepare, which resets
-        # the threshold to its default at the start of every driver
-        # query invocation.
-        spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold",
-                       str(max(max_pushdown_keys, 10)))
+        # verdict query ever executes).  util.set_conf records the
+        # caller's value, and util.release_all restores it.
+        set_conf(spark, "spark.sql.parquet.pushdown.inFilterThreshold",
+                 str(max(max_pushdown_keys, 10)))
         pruned = bands.filter(
             F.col("bkp").isin(bkps) & F.col("band_key").isin(keys))
     else:

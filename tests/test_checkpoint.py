@@ -556,18 +556,27 @@ def test_compaction_crash_matrix(spark, tmp_path, fail_at):
 
 
 def test_train_bpe_releases_prior_checkpoints(spark):
-    """functions/bpe.py: persistent-RDD count must stay bounded across
-    merge steps (each iteration releases the previous checkpoint's
-    blocks) — a deep vocabulary run is O(1) storage, not O(steps)."""
+    """functions/bpe.py: persistent RDDs must stay bounded across merge
+    steps (each iteration releases the previous snapshot's blocks) — a
+    deep vocabulary run is O(1) storage, not O(steps) — and the last
+    snapshot goes with util.release_all. ID SETS, not counts: the
+    ContextCleaner frees older blocks concurrently."""
     from fast_pdf_parser_spark.functions.bpe import train_bpe
+    from fast_pdf_parser_spark.util import release_all
 
     sc = spark.sparkContext
-    before = len(sc._jsc.getPersistentRDDs())
+
+    def ids():
+        return {int(k) for k in
+                sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = ids()
     docs = spark.createDataFrame(
         [(0, "low lower lowest low low"), (1, "newer new wide wider")],
         "doc_id long, text string")
     merges = train_bpe(spark, docs, 6)
     assert len(merges) == 6
-    after = len(sc._jsc.getPersistentRDDs())
-    # at most the final step's checkpoint may remain registered
-    assert after - before <= 1
+    # at most the final step's snapshot may remain registered
+    assert len(ids() - before) <= 1
+    release_all()
+    assert ids() - before == set()

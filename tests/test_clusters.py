@@ -219,22 +219,20 @@ def test_error_path_frees_all_blocks(spark):
 
 
 def test_checkpointed_handle_is_live_jrdd(spark):
-    """Pin the private-JVM-internals read in clusters._checkpointed: the
-    returned handle must be a LIVE JRDD whose id appears in the JVM's
-    persistent-RDD map and whose unpersist actually drops the block — a
+    """Pin the private-JVM-internals read in util.materialize: the
+    recorded handle must be a LIVE JRDD whose id appears in the JVM's
+    persistent-RDD map and whose release actually drops the block — a
     Spark upgrade that changes the plan shape turns this red instead of
     silently turning cleanup into a no-op (the fallback path). Asserts on
     ID SETS, never counts (the async ContextCleaner makes counts flaky)."""
-    from fast_pdf_parser_spark.operators.clusters import (
-        _NoopRddHandle,
-        _checkpointed,
-    )
+    from fast_pdf_parser_spark import util
 
     df = spark.range(64).selectExpr("id AS doc_id", "id AS label")
-    ckpt, handle = _checkpointed(df)
-    assert not isinstance(handle, _NoopRddHandle), (
+    ckpt = util.materialize(df)
+    assert id(ckpt) in util._SNAPSHOTS, (
         "fallback engaged: the analyzed-plan RDD handle read broke on "
         "this Spark version")
+    handle = util._SNAPSHOTS[id(ckpt)][1]
     rid = int(handle.id())  # a live JRDD has an id
 
     def persistent_ids():
@@ -243,18 +241,18 @@ def test_checkpointed_handle_is_live_jrdd(spark):
 
     assert rid in persistent_ids()
     ckpt.count()  # the checkpointed lineage is readable while persisted
-    handle.unpersist(False)
+    util.release(ckpt)
     assert rid not in persistent_ids()
 
 
 def test_checkpointed_transient_error_surfaces():
-    """The fallback in clusters._checkpointed is for API-removal shapes
+    """The fallback in util.materialize is for API-removal shapes
     (AttributeError / Py4JError) ONLY: a transient runtime failure while
     reading the handle must propagate — the once-per-process warning
     would otherwise swallow every recurrence after the first."""
     import pytest
 
-    from fast_pdf_parser_spark.operators.clusters import _checkpointed
+    from fast_pdf_parser_spark.util import materialize
 
     class _BoomJdf:
         def queryExecution(self):
@@ -268,4 +266,4 @@ def test_checkpointed_transient_error_surfaces():
             return _FakeCkpt()
 
     with pytest.raises(RuntimeError, match="transient JVM hiccup"):
-        _checkpointed(_FakeDf())
+        materialize(_FakeDf())

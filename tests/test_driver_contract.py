@@ -367,3 +367,70 @@ def test_clean_corpus_composition(spark):
                     spark.sql(spark_sql("text_quality_sample")).collect()}
     for r in origs:
         assert r.split == sample_split[r.doc_id], r.doc_id
+
+
+def _persistent_rdd_ids(spark):
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+@pytest.mark.parametrize("name", list(entrymod.queries()))
+def test_query_leaves_no_persisted_rdds(spark, name):
+    """Leak gate: whatever a queries() entry persists is freed by the next
+    _prepare (util.release_all), so one query never slows or breaks the
+    next. ID SETS, not counts: the ContextCleaner frees older blocks
+    concurrently (see test_clusters::test_error_path_frees_all_blocks)."""
+    entrymod._prepare(spark, SF_DIR)
+    before = _persistent_rdd_ids(spark)
+    entrymod.queries()[name](spark, SF_DIR).collect()
+    entrymod._prepare(spark, SF_DIR)
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_prepare_restores_conf_raised_by_previous_query(spark):
+    """probe_band_table raises the parquet In-pushdown threshold for its
+    consuming query; the next _prepare restores the caller's own value
+    instead of leaving the raised one or unsetting it."""
+    key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    spark.conf.set(key, "50")
+    try:
+        entrymod.queries()["dedup_incremental_near"](spark, SF_DIR).collect()
+        assert spark.conf.get(key) != "50"  # the probe did raise it
+        entrymod._prepare(spark, SF_DIR)
+        assert spark.conf.get(key) == "50"
+    finally:
+        spark.conf.unset(key)
+
+
+def test_text_encode_pack_value_pin(spark):
+    """text_encode_pack is rows-only (greedy-vocab ids are not SQL), so
+    its output is pinned by hash: a rewrite of its materialization must
+    not change a single (seq_id, n_docs, n_tokens, ids_sum) row."""
+    import hashlib
+
+    rows = entrymod.queries()["text_encode_pack"](spark, SF_DIR).collect()
+    key = sorted((r.seq_id, r.n_docs, r.n_tokens, r.ids_sum) for r in rows)
+    assert len(key) == 508
+    assert hashlib.sha256(repr(key).encode()).hexdigest() == (
+        "428ecc80e9571475dde2c010e76595e0811c89a12926e1171fe0b7f34d9dab3f")
+
+
+def test_local_checkpoint_only_in_materialize():
+    """util.materialize is the one place program code cuts lineage, so
+    every snapshot lands in the ledger that release_all empties."""
+    import inspect
+    import pathlib
+
+    from fast_pdf_parser_spark import util
+
+    repo = pathlib.Path(entrymod.__file__).parent
+    files = [repo / "__spark_entry__.py",
+             *sorted((repo / "fast_pdf_parser_spark").rglob("*.py"))]
+    hits = [(f.relative_to(repo).as_posix(), n)
+            for f in files
+            for n, line in enumerate(f.read_text().splitlines(), 1)
+            if "localCheckpoint(" in line]
+    src, start = inspect.getsourcelines(util.materialize)
+    assert hits
+    assert all(f == "fast_pdf_parser_spark/util.py"
+               and start <= n < start + len(src) for f, n in hits), hits
